@@ -1,17 +1,20 @@
-"""Per-query optimization probe for round 14.
+"""Per-query optimization probe.
 
 For each named registry query at the given SF:
-  - writes `.explain("formatted")` to plans/r15/<query>_<tag>.txt
-  - times the noop-sink execution (guide 1.4) `reps` times
+  - times the noop-sink execution `reps` times
   - records deterministic signals per timed rep: shuffle-read MB and
     task count via the REST status API (the BASELINE.md adjudication
     rule: flat bytes + moved wall = host noise, moved bytes = real)
   - computes an order-independent result checksum (sum + count of
     xxhash64 over every column cast to string) so a before/after pair
     proves the optimization did not change WHAT the query computes
+  - with --out DIR, writes `.explain("formatted")` to
+    DIR/<query>_<tag>.txt
 
-Usage: python scripts/r15_probe.py <tag> <query> [query ...] \
-           [--sf /root/testdata/sf0.1] [--reps 3]
+Usage: python scripts/probe.py <tag> <query> [query ...] \
+           [--out plans/<dir>] [--sf SF_DIR] [--reps 3]
+
+--sf defaults to $SPARK_GRAFT_SF_DIR (the bench.py data contract).
 
 Prints one JSON line per query:
   {"query", "tag", "times", "shuffle_mb", "n_tasks", "checksum", "rows"}
@@ -26,7 +29,7 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -56,14 +59,17 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("tag")
     ap.add_argument("names", nargs="+")
-    ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    ap.add_argument("--out", help="directory for the formatted plans")
+    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR"))
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--no-plan", action="store_true")
     args = ap.parse_args()
+    if not args.sf:
+        ap.error("--sf is required when SPARK_GRAFT_SF_DIR is unset")
 
-    os.makedirs("/root/repo/plans/r15", exist_ok=True)
+    if args.out:
+        os.makedirs(args.out, exist_ok=True)
     spark = get_spark(
-        "r15_probe",
+        "probe",
         extra_conf={
             "spark.ui.enabled": "true",
             "spark.ui.retainedStages": "3000",
@@ -75,7 +81,7 @@ def main() -> None:
     qs = queries()
 
     for name in args.names:
-        spark.sparkContext.setJobDescription(f"r15_probe:{name}")
+        spark.sparkContext.setJobDescription(f"probe:{name}")
         # timing reps run FIRST so rep 0 is the session-cold number
         # (constructing a df for the plan can eagerly build family
         # caches and hide the first-consumer cost)
@@ -100,13 +106,11 @@ def main() -> None:
             )
             n_tasks.append(sum(s.get("numCompleteTasks", 0) for s in new))
         df = qs[name](spark, args.sf)
-        if not args.no_plan:
+        if args.out:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            with open(
-                f"/root/repo/plans/r15/{name}_{args.tag}.txt", "w"
-            ) as f:
+            with open(os.path.join(args.out, f"{name}_{args.tag}.txt"), "w") as f:
                 f.write(plan)
         chk = (
             qs[name](spark, args.sf)

@@ -11,7 +11,10 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
 
@@ -26,7 +29,11 @@ from txf_continuous_data_pipeline_spark.operators.quality import (
 )
 from txf_continuous_data_pipeline_spark.operators.sessions import split_and_label
 from txf_continuous_data_pipeline_spark.plans.pipeline import incremental_run
-from txf_continuous_data_pipeline_spark.sources import read_table
+from txf_continuous_data_pipeline_spark.sources import (
+    append_idempotent,
+    read_table,
+    sink_watermark,
+)
 
 
 def test_incremental_run_is_idempotent(spark, sf_dir, tmp_path):
@@ -37,6 +44,39 @@ def test_incremental_run_is_idempotent(spark, sf_dir, tmp_path):
     assert n2 == 0, f"second run appended {n2} rows"
     total = spark.read.parquet(sink).count()
     assert total == n1
+
+
+def _two_ticks(spark):
+    import datetime as dt
+
+    return spark.createDataFrame(
+        [Row(ts=dt.datetime(2024, 1, 2, 9, m), value=1.0) for m in (0, 5)]
+    )
+
+
+def test_append_idempotent_raises_on_unreadable_sink(spark, tmp_path):
+    """Gate 2 must not read an existing-but-unreadable sink as "no
+    sink": that would re-append the whole history."""
+    sink = tmp_path / "sink"
+    sink.mkdir()
+    (sink / "part-0.parquet").write_bytes(b"not a parquet file")
+    df = _two_ticks(spark)
+    with pytest.raises(Py4JJavaError, match="not a Parquet file"):
+        append_idempotent(df, str(sink))
+    assert os.listdir(sink) == ["part-0.parquet"]
+
+
+@pytest.mark.parametrize("state", ["missing", "uncommitted"])
+def test_append_idempotent_empty_sink_is_first_append(spark, tmp_path, state):
+    """No sink, or one whose first append died before its commit
+    (only _temporary/ inside), holds no rows: the append is a first
+    one."""
+    sink = str(tmp_path / "sink")
+    if state == "uncommitted":
+        os.makedirs(os.path.join(sink, "_temporary", "0"))
+    assert sink_watermark(spark, sink) is None
+    assert append_idempotent(_two_ticks(spark), sink) == 2
+    assert sink_watermark(spark, sink).minute == 5
 
 
 def _dense_kbar_fixture(spark, n_days: int = 2):

@@ -19,6 +19,11 @@ Layout (see SURVEY.md section 7):
                           relational, dedup, similarity, textstats,
                           multimodal
     plans/                end-to-end pipeline composition
+    queries/              driver-contract registry + DuckDB oracles;
+                          registry.artifact is the one per-corpus session
+                          store (keyed by corpus_key, superseded entries
+                          released) and registry.scratch_dir the one
+                          per-app scratch root (removed at exit)
     streaming/            Structured Streaming variant (watermark +
                           foreachBatch idempotent sink)
 """

@@ -105,6 +105,33 @@ def release_materialized() -> None:
         _MATERIALIZED.pop().unpersist()
 
 
+def _bars_5m(events: DataFrame) -> DataFrame:
+    """resample(A1, closed-right): the 5-min OHLCV bars every pipeline
+    starts from."""
+    return tumbling_ohlcv(
+        events, ts_col="ts", price_col="value", width="5 minutes", closed="right",
+        out_ts="bar_ts",
+    ).drop("n_rows")
+
+
+def _gated_bars(
+    labeled: DataFrame, cfg: DataFrame, expected, *, end_inclusive: bool
+) -> DataFrame:
+    """The shared tail: backadjust(J1+A7, broadcast range join) ->
+    MXF_code stamp(P2) -> persisted intermediate -> drop-open-session
+    (F7) at the `expected` per-session bar counts."""
+    adjusted = _materialized(
+        with_mxf_code(
+            backadjust(
+                labeled, cfg, ts_col="bar_ts", end_inclusive=end_inclusive
+            )
+        )
+    )
+    return drop_open_session(
+        adjusted, expected, session_col="session_id", ts_col="bar_ts"
+    ).select(*_OUT_COLS)
+
+
 def bar_pipeline_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: 5-min back-adjusted session bars from `events`.
 
@@ -113,20 +140,12 @@ def bar_pipeline_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop-open-session(F7).
     """
     events = read_table(spark, sf_dir, "events")
-    bars = tumbling_ohlcv(
-        events, ts_col="ts", price_col="value", width="5 minutes", closed="right",
-        out_ts="bar_ts",
-    ).drop("n_rows")
-    labeled = split_and_label(bars, "bar_ts")
-    cfg = weekly_settle_config(events)
-    adjusted = _materialized(
-        with_mxf_code(
-            backadjust(labeled, cfg, ts_col="bar_ts", end_inclusive=False)
-        )
+    return _gated_bars(
+        split_and_label(_bars_5m(events), "bar_ts"),
+        weekly_settle_config(events),
+        EXPECTED_5MIN,
+        end_inclusive=False,
     )
-    return drop_open_session(
-        adjusted, EXPECTED_5MIN, session_col="session_id", ts_col="bar_ts"
-    ).select(*_OUT_COLS)
 
 
 def bar_pipeline_5m_cfgfile(
@@ -141,20 +160,12 @@ def bar_pipeline_5m_cfgfile(
     from ..sources import read_settle_config
 
     events = read_table(spark, sf_dir, "events")
-    bars = tumbling_ohlcv(
-        events, ts_col="ts", price_col="value", width="5 minutes", closed="right",
-        out_ts="bar_ts",
-    ).drop("n_rows")
-    labeled = split_and_label(bars, "bar_ts")
-    cfg = read_settle_config(spark, config_path)
-    adjusted = _materialized(
-        with_mxf_code(
-            backadjust(labeled, cfg, ts_col="bar_ts", end_inclusive=True)
-        )
+    return _gated_bars(
+        split_and_label(_bars_5m(events), "bar_ts"),
+        read_settle_config(spark, config_path),
+        EXPECTED_5MIN,
+        end_inclusive=True,
     )
-    return drop_open_session(
-        adjusted, EXPECTED_5MIN, session_col="session_id", ts_col="bar_ts"
-    ).select(*_OUT_COLS)
 
 
 def bar_pipeline_60m(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -169,23 +180,16 @@ def bar_pipeline_60m(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.resample import rollup_ohlcv_sessions
 
     events = read_table(spark, sf_dir, "events")
-    bars5 = tumbling_ohlcv(
-        events, ts_col="ts", price_col="value", width="5 minutes",
-        closed="right", out_ts="bar_ts",
-    ).drop("n_rows")
     bars60 = rollup_ohlcv_sessions(
-        bars5, ts_col="bar_ts", width="60 minutes", day_offset="45 minutes"
+        _bars_5m(events), ts_col="bar_ts", width="60 minutes",
+        day_offset="45 minutes",
     ).drop("n_bars")
-    labeled = with_session_labels_60(bars60)
-    cfg = weekly_settle_config(events)
-    adjusted = _materialized(
-        with_mxf_code(
-            backadjust(labeled, cfg, ts_col="bar_ts", end_inclusive=False)
-        )
+    return _gated_bars(
+        with_session_labels_60(bars60),
+        weekly_settle_config(events),
+        EXPECTED_60MIN,
+        end_inclusive=False,
     )
-    return drop_open_session(
-        adjusted, EXPECTED_60MIN, session_col="session_id", ts_col="bar_ts"
-    ).select(*_OUT_COLS)
 
 
 def with_session_labels_60(bars: DataFrame) -> DataFrame:

@@ -66,13 +66,9 @@ CORE = [
 # Queries whose SEMANTICS or oracle changed this round: their old
 # green rows certify the old form, so the rotation treats them as
 # never-green until the driver re-verifies the new form (then remove
-# them from the set). r15 (r14 verdict #2): the three multimodal
-# queries whose synthesis/hash paths were fused in r14 fell outside
-# that round's 50-query driver window - force their re-certification
-# before their slots return to the stalest-green rotation.
-RETRY: frozenset[str] = frozenset(
-    {"image_phash_neardup", "audio_fingerprint_neardup", "clip_align_filter"}
-)
+# them from the set). Empty: the last members (the three multimodal
+# queries fused in r14) were re-certified green in CORRECTNESS_r15.
+RETRY: frozenset[str] = frozenset()
 
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

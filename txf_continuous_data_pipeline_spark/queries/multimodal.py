@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..operators.multimodal import extract_features
 from ..sources import read_table
-from .registry import q
+from .registry import artifact, corpus_key, q, scratch_dir
 
 _KIND_SQL = """CASE doc_id % 3 WHEN 0 THEN 'image'
                                WHEN 1 THEN 'audio'
@@ -524,10 +524,9 @@ def clip_align_filter(spark, sf_dir):
     return pairs.where(F.col("clip_cos") >= 0.9)
 
 
-# WebDataset round trip: one write per (applicationId, corpus) into an
-# app-keyed temp dir (the _bm25_index_path discipline - no cross-session
+# WebDataset round trip: one write per (applicationId, corpus) under the
+# app's scratch root (the _bm25_index_path discipline - no cross-session
 # sharing, so no rename/lock choreography needed).
-_WDS_CACHE: dict = {}
 
 _WDS_JSON_SQL = (
     """'{"doc_id":' || CAST(doc_id AS VARCHAR) || ',"lang":"' """
@@ -553,22 +552,11 @@ FROM documents
 
 
 def _wds_path(spark, sf_dir):
-    import os
-    import re
-    import tempfile
-
     from ..sources.webdataset import write_webdataset
 
-    key = ("wds",) + tuple(_mm_corpus_key(spark, sf_dir))
-    if key not in _WDS_CACHE:
-        app = re.sub(
-            r"[^A-Za-z0-9_-]", "_", spark.sparkContext.applicationId
-        )
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_wds_{app}",
-            re.sub(r"[^A-Za-z0-9_-]", "_", str(key[1:])),
-        )
+    def build():
+        key = corpus_key(spark, sf_dir, "documents")
+        path = scratch_dir(spark, f"wds{key[1:]}")
         docs = read_table(spark, sf_dir, "documents")
         json_str = F.concat(
             F.lit('{"doc_id":'),
@@ -598,14 +586,9 @@ def _wds_path(spark, sf_dir):
         write_webdataset(
             long_form, path, n_shards=16, shard_col="shard"
         )
-        _WDS_CACHE[key] = path
-    return _WDS_CACHE[key]
+        return path
 
-
-def _mm_corpus_key(spark, sf_dir):
-    from .registry import corpus_key
-
-    return corpus_key(spark, sf_dir, "documents")
+    return artifact(spark, sf_dir, "documents", "wds", build)
 
 
 @q("webdataset_roundtrip", _WDS_SQL)

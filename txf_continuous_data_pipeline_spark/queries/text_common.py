@@ -30,7 +30,7 @@ from ..operators.textstats import (
     text_stats,
 )
 from ..sources import read_table
-from .registry import q
+from .registry import artifact, q
 
 _TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
 
@@ -99,30 +99,17 @@ def _pairs_from_index(inv, threshold: float):
     )
 
 
-# Per-corpus caches, keyed on (applicationId, sf_dir, file stamp) like
-# _COMPONENTS_CACHE:
-#  - _INDEX_CACHE: the exploded hashed shingle index (one build serves
+# Per-corpus session artifacts (registry.artifact):
+#  - shingle_index: the exploded hashed shingle index (one build serves
 #    the Jaccard pairs, contamination, and any future shingle consumer;
 #    the build's interpreted transform chain over every document is the
 #    expensive part, ~1s + ~1s plan analysis per occurrence at sf0.1).
-#  - _PAIRS_CACHE: the pairs frame at the loosest threshold any
+#  - shared_pairs: the pairs frame at the loosest threshold any
 #    consumer needs (0.02, the components build); the inverted-index
 #    join + per-pair aggregation is identical for every consumer - the
 #    Jaccard threshold is only a post-aggregation filter - so each
 #    consumer re-filters on the exact (unrounded) jaccard.
 _PAIRS_FLOOR = 0.02
-
-
-_PAIRS_CACHE: dict = {}
-
-
-_INDEX_CACHE: dict = {}
-
-
-def _corpus_key(spark, sf_dir):
-    from .registry import corpus_key
-
-    return corpus_key(spark, sf_dir, "documents")
 
 
 def _shingle_index(spark, sf_dir):
@@ -133,25 +120,24 @@ def _shingle_index(spark, sf_dir):
     # transform exactly once per session). Exploding the checkpointed
     # arrays is cheap; the frame stays lazy so _pairs_from_index's
     # self-join still reuses one exchange for both sides.
-    key = _corpus_key(spark, sf_dir)
-    if key not in _INDEX_CACHE:
-        base = _shingle_base(spark, sf_dir)
-        _INDEX_CACHE[key] = base.select(
+    return artifact(
+        spark, sf_dir, "documents", "shingle_index",
+        lambda: _shingle_base(spark, sf_dir).select(
             "doc_id",
             "source",
             F.size("sh").alias("n_sh"),
             F.explode("sh").alias("sh"),
-        )
-    return _INDEX_CACHE[key]
+        ),
+    )
 
 
 def _shared_pairs(spark, sf_dir):
-    key = _corpus_key(spark, sf_dir)
-    if key not in _PAIRS_CACHE:
-        _PAIRS_CACHE[key] = _pairs_from_index(
+    return artifact(
+        spark, sf_dir, "documents", "shared_pairs",
+        lambda: _pairs_from_index(
             _shingle_index(spark, sf_dir), _PAIRS_FLOOR
-        ).localCheckpoint(eager=True)
-    return _PAIRS_CACHE[key]
+        ).localCheckpoint(eager=True),
+    )
 
 
 # h60 in DuckDB: identical value to operators/dedup.h60 (first 15 hex
@@ -160,7 +146,7 @@ def _h60_sql(expr: str) -> str:
     return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 
 
-# Per-corpus cache of the per-doc hashed shingle-ARRAY frame
+# Per-corpus artifact of the per-doc hashed shingle-ARRAY frame
 # (doc_id, source, sh: array<long>) - the ONE interpreted
 # shingle-transform pass per corpus. Every shingle consumer slices it:
 # the MinHash signature+verify stages take (doc_id, sh), the exploded
@@ -168,12 +154,8 @@ def _h60_sql(expr: str) -> str:
 # (The r02 minhash_neardup regression was a per-consumer rebuild of
 # this transform; r11 merged the last two remaining builds - sets and
 # index - into this one.)
-_SHINGLE_BASE_CACHE: dict = {}
-
-
 def _shingle_base(spark, sf_dir):
-    key = _corpus_key(spark, sf_dir)
-    if key not in _SHINGLE_BASE_CACHE:
+    def build():
         from ..operators.dedup import _batch_min_splits
 
         # Parallelism floor BEFORE the interpreted transform (r14): the
@@ -186,12 +168,13 @@ def _shingle_base(spark, sf_dir):
         # keep their natural layout - no new exchange (same gate as the
         # delta lanes, r13 verdict #2).
         docs = _batch_min_splits(read_table(spark, sf_dir, "documents"))
-        _SHINGLE_BASE_CACHE[key] = docs.select(
+        return docs.select(
             F.col("doc_id"),
             F.col("source"),
             shingle_array(F.col("text"), n=3, hashed=True).alias("sh"),
         ).localCheckpoint(eager=True)
-    return _SHINGLE_BASE_CACHE[key]
+
+    return artifact(spark, sf_dir, "documents", "shingle_base", build)
 
 
 # Transitive closure via a recursive CTE: reach = every node reachable
@@ -229,34 +212,27 @@ comp AS (
 """
 
 
-_COMPONENTS_CACHE: dict = {}
-
-
 def _neardup_components(spark, sf_dir, threshold=0.02):
-    """pairs -> connected components, built once per (Spark app,
-    sf_dir, threshold) and shared by neardup_groups / neardup_keep -
-    the iterative label propagation is the expensive stage and both
-    queries consume the identical result. Keyed on applicationId (a new
-    session, whose checkpointed blocks are gone, rebuilds instead of
-    erroring) and on the source file's mtime/size (a rewritten corpus
-    invalidates the entry); the cached frame is a few rows per near-dup
+    """pairs -> connected components, one artifact per (corpus,
+    threshold) shared by neardup_groups / neardup_keep - the iterative
+    label propagation is the expensive stage and both queries consume
+    the identical result; the cached frame is a few rows per near-dup
     doc."""
-    import os
-
     from ..operators.graph import connected_components
 
     assert threshold >= _PAIRS_FLOOR
-    path = os.path.join(sf_dir, "documents.parquet")
-    stamp = (os.path.getmtime(path), os.path.getsize(path))
-    key = (spark.sparkContext.applicationId, sf_dir, threshold, stamp)
-    if key not in _COMPONENTS_CACHE:
+
+    def build():
         pairs = _shared_pairs(spark, sf_dir).where(
             F.col("jaccard_exact") >= threshold
         )
-        _COMPONENTS_CACHE[key] = connected_components(
+        return connected_components(
             pairs, "id_a", "id_b"
         ).localCheckpoint(eager=True)
-    return _COMPONENTS_CACHE[key]
+
+    return artifact(
+        spark, sf_dir, "documents", f"neardup_components:{threshold}", build
+    )
 
 
 def _dup_span_removal_sql(src: str = "documents") -> str:
@@ -374,18 +350,15 @@ FROM kept
 """
 
 
-# Per-corpus cache of the 64-dim hashed feature frame - the shared
+# Per-corpus artifact of the hashed feature frame - the shared
 # intermediate of the classifier pair (serving scores the whole frame,
 # training collects its doc_id % 5 slice), the _shingle_sets pattern.
-_HASH_FEATS_CACHE: dict = {}
-
-
 def _hash_feats(spark, sf_dir, dim: int = 64):
     from ..operators.textstats import hashing_trick_embed
 
-    key = (_corpus_key(spark, sf_dir), dim)
-    if key not in _HASH_FEATS_CACHE:
-        _HASH_FEATS_CACHE[key] = hashing_trick_embed(
+    return artifact(
+        spark, sf_dir, "documents", f"hash_feats:{dim}",
+        lambda: hashing_trick_embed(
             read_table(spark, sf_dir, "documents"), dim=dim
-        ).localCheckpoint(eager=True)
-    return _HASH_FEATS_CACHE[key]
+        ).localCheckpoint(eager=True),
+    )

@@ -27,7 +27,7 @@ from ..operators.textstats import (
     text_stats,
 )
 from ..sources import read_table
-from .registry import q
+from .registry import artifact, corpus_key, q, scratch_dir
 from .text_common import (  # noqa: F401
     _NEARDUP_COMP_CTES,
     _SHINGLES,
@@ -1476,40 +1476,25 @@ def es_weighted_sample_q(spark, sf_dir):
     )
 
 
-_JSONL_CACHE: dict = {}
-
-
 def _jsonl_path(spark, sf_dir):
-    """One JSONL shard write per (applicationId, corpus), app-keyed
-    temp dir - the _wds_path discipline (no cross-session sharing, so
-    no rename/lock choreography beyond the writer's own atomic
-    renames)."""
-    import os
-    import re
-    import tempfile
-
+    """One JSONL shard write per (applicationId, corpus) under the
+    app's scratch root - the _wds_path discipline (no cross-session
+    sharing, so no rename/lock choreography beyond the writer's own
+    atomic renames)."""
     from ..sources.jsonl import write_jsonl
 
-    p = os.path.join(sf_dir, "documents.parquet")
-    stamp = (os.path.getmtime(p), os.path.getsize(p))
-    key = (spark.sparkContext.applicationId, sf_dir, stamp)
-    if key not in _JSONL_CACHE:
-        app = re.sub(
-            r"[^A-Za-z0-9_-]", "_", spark.sparkContext.applicationId
-        )
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_jsonl_{app}",
-            re.sub(r"[^A-Za-z0-9_-]", "_", str(key[1:])),
-        )
+    def build():
+        key = corpus_key(spark, sf_dir, "documents")
+        path = scratch_dir(spark, f"jsonl{key[1:]}")
         docs = read_table(spark, sf_dir, "documents").select(
             "doc_id", "lang", "text", (F.col("doc_id") % 8).alias("shard")
         )
         write_jsonl(
             docs, path, n_shards=8, key_col="doc_id", shard_col="shard"
         )
-        _JSONL_CACHE[key] = path
-    return _JSONL_CACHE[key]
+        return path
+
+    return artifact(spark, sf_dir, "documents", "jsonl", build)
 
 
 _JSONL_SQL = """
@@ -1545,37 +1530,23 @@ def jsonl_roundtrip_q(spark, sf_dir):
     )
 
 
-_ORC_CACHE: dict = {}
-
-
 def _orc_path(spark, sf_dir):
     """One partitioned ORC write per (applicationId, corpus) - the
     _jsonl_path discipline. Layout: partitionBy(bucket = doc_id % 8),
     Spark's native ORC writer, so the read side exercises directory
     partition pruning (the ORC analogue of the parquet sink's pruned
     incremental read)."""
-    import os
-    import re
-    import tempfile
 
-    p = os.path.join(sf_dir, "documents.parquet")
-    stamp = (os.path.getmtime(p), os.path.getsize(p))
-    key = (spark.sparkContext.applicationId, sf_dir, stamp)
-    if key not in _ORC_CACHE:
-        app = re.sub(
-            r"[^A-Za-z0-9_-]", "_", spark.sparkContext.applicationId
-        )
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_orc_{app}",
-            re.sub(r"[^A-Za-z0-9_-]", "_", str(key[1:])),
-        )
+    def build():
+        key = corpus_key(spark, sf_dir, "documents")
+        path = scratch_dir(spark, f"orc{key[1:]}")
         docs = read_table(spark, sf_dir, "documents").withColumn(
             "bucket", F.col("doc_id") % 8
         )
         docs.write.mode("overwrite").partitionBy("bucket").orc(path)
-        _ORC_CACHE[key] = path
-    return _ORC_CACHE[key]
+        return path
+
+    return artifact(spark, sf_dir, "documents", "orc", build)
 
 
 _ORC_SQL = """

@@ -27,11 +27,8 @@ from ..operators.textstats import (
     text_stats,
 )
 from ..sources import read_table
-from .registry import q
-from .text_common import (  # noqa: F401
-    _TOKS,
-    _corpus_key,
-)
+from .registry import artifact, q
+from .text_common import _TOKS
 
 
 _TOKEN_HIST_SQL = f"""
@@ -300,22 +297,19 @@ GROUP BY d.doc_id
     )
 
 
-# Per-corpus cache of the 10 trained merge rules (a kilobyte-sized
-# driver artifact, like the minhash index / shingle caches above): the
+# Per-corpus artifact of the 10 trained merge rules (a kilobyte-sized
+# driver value, like the minhash index / shingle artifacts): the
 # iterative trainer runs once per corpus per session even when both BPE
 # queries (and the bench) execute in the same session.
-_BPE_MERGES_CACHE: dict = {}
-
-
 def _trained_merges(spark, sf_dir, n_merges: int = 10):
     from ..operators.textstats import bpe_train
 
-    key = (_corpus_key(spark, sf_dir), n_merges)
-    if key not in _BPE_MERGES_CACHE:
-        _BPE_MERGES_CACHE[key] = bpe_train(
+    return artifact(
+        spark, sf_dir, "documents", f"bpe_merges:{n_merges}",
+        lambda: bpe_train(
             read_table(spark, sf_dir, "documents"), n_merges=n_merges
-        )
-    return _BPE_MERGES_CACHE[key]
+        ),
+    )
 
 
 @q("bpe_merge_rules", _bpe_unroll_sql(10))
@@ -428,18 +422,15 @@ GROUP BY d.doc_id
     )
 
 
-_BYTE_BPE_MERGES_CACHE: dict = {}
-
-
 def _trained_byte_merges(spark, sf_dir, n_merges: int = 10):
     from ..operators.textstats import byte_bpe_train
 
-    key = (_corpus_key(spark, sf_dir), n_merges)
-    if key not in _BYTE_BPE_MERGES_CACHE:
-        _BYTE_BPE_MERGES_CACHE[key] = byte_bpe_train(
+    return artifact(
+        spark, sf_dir, "documents", f"byte_bpe_merges:{n_merges}",
+        lambda: byte_bpe_train(
             read_table(spark, sf_dir, "documents"), n_merges=n_merges
-        )
-    return _BYTE_BPE_MERGES_CACHE[key]
+        ),
+    )
 
 
 @q("byte_bpe_merge_rules", _byte_bpe_unroll_sql(10))
@@ -523,24 +514,21 @@ def kn_bigram_logprob_q(spark, sf_dir):
     return kneser_ney_logprob(read_table(spark, sf_dir, "documents"))
 
 
-# Session cache of the trained unigram vocab per corpus (the
-# _BPE_MERGES_CACHE discipline): vocab + piece-count queries and the
+# Session artifact of the trained unigram vocab per corpus (the
+# _trained_merges discipline): vocab + piece-count queries and the
 # bench share one training run.
-_UNIGRAM_VOCAB_CACHE: dict = {}
-
-
 def _trained_unigram_vocab(spark, sf_dir):
     from ..operators.textstats import unigram_lm_train
 
-    key = _corpus_key(spark, sf_dir)
-    if key not in _UNIGRAM_VOCAB_CACHE:
-        _UNIGRAM_VOCAB_CACHE[key] = unigram_lm_train(
+    return artifact(
+        spark, sf_dir, "documents", "unigram_vocab",
+        lambda: unigram_lm_train(
             read_table(spark, sf_dir, "documents"),
             vocab_size=80,
             seed_size=300,
             em_iters=1,
-        )
-    return _UNIGRAM_VOCAB_CACHE[key]
+        ),
+    )
 
 
 @q("unigram_lm_vocab", None)
@@ -588,18 +576,15 @@ def unigram_piece_counts_q(spark, sf_dir):
     )
 
 
-_WORDPIECE_CACHE: dict = {}
-
-
 def _trained_wordpiece(spark, sf_dir, n_merges: int = 10):
     from ..operators.textstats import wordpiece_train
 
-    key = (_corpus_key(spark, sf_dir), n_merges)
-    if key not in _WORDPIECE_CACHE:
-        _WORDPIECE_CACHE[key] = wordpiece_train(
+    return artifact(
+        spark, sf_dir, "documents", f"wordpiece:{n_merges}",
+        lambda: wordpiece_train(
             read_table(spark, sf_dir, "documents"), n_merges=n_merges
-        )
-    return _WORDPIECE_CACHE[key]
+        ),
+    )
 
 
 def _wordpiece_ctes(n_merges: int) -> str:

@@ -665,7 +665,7 @@ WHERE session_id NOT IN (SELECT session_id FROM open_session)
 
 
 
-# Session cache of the gated 5-min pipeline output per corpus (the
+# Session artifact of the gated 5-min pipeline output per corpus (the
 # _neardup_components discipline applied to the reference flagship):
 # twenty registry call sites consume bar_pipeline_5m (the session
 # risk/microstructure family grew it past the original thirteen),
@@ -673,27 +673,16 @@ WHERE session_id NOT IN (SELECT session_id FROM open_session)
 # the resample -> label -> backadjust -> gate chain from the events
 # scan. The memoized frame is persist()ed, NOT checkpointed - lineage
 # (and every plan pin reading it) is unchanged; only the blocks are
-# warm. Keyed on applicationId (a new session rebuilds, never errors)
-# and the source file's mtime/size (a rewritten corpus invalidates).
+# warm. A rewritten corpus unpersists the superseded frame (the store
+# releases it; the release_materialized() lifecycle cannot see it).
 # Bar grain is ~1/300th of tick grain, so the footprint is modest.
-_BARS_CACHE: dict = {}
-
-
 def _cached_bar_pipeline(spark, sf_dir):
-    from .registry import corpus_key
+    from .registry import artifact
 
-    key = corpus_key(spark, sf_dir, "events")
-    if key not in _BARS_CACHE:
-        # a rewritten corpus (new stamp) supersedes the old entry:
-        # unpersist and drop it, or its MEMORY_AND_DISK blocks would
-        # stay pinned for the process lifetime (review-wave finding -
-        # the release_materialized() lifecycle cannot see this frame)
-        for stale in [
-            k for k in _BARS_CACHE if k[:2] == key[:2] and k != key
-        ]:
-            _BARS_CACHE.pop(stale).unpersist()
-        _BARS_CACHE[key] = bar_pipeline_5m(spark, sf_dir).persist()
-    return _BARS_CACHE[key]
+    return artifact(
+        spark, sf_dir, "events", "bar_pipeline_5m",
+        lambda: bar_pipeline_5m(spark, sf_dir).persist(),
+    )
 
 
 @q("bar_pipeline_5m", _PIPELINE_SQL)

@@ -216,19 +216,45 @@ def read_settle_config(
     return kept
 
 
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Explicit Hadoop-FS existence probe - THE way a sink/state reader
+    tells "missing" (first run) from "unreadable". Never a blanket
+    except around the read, nor a substring match on the
+    AnalysisException text (which varies across Spark versions and
+    locales): a real read failure on an EXISTING path (partial file
+    from a crashed attempt, corrupt footer, permissions) misread as
+    "missing" re-appends history or overwrites accumulated state.
+    Resolves URI-form and remote paths that os.path.exists cannot."""
+    jvm = spark.sparkContext._jvm
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    return bool(jpath.getFileSystem(hconf).exists(jpath))
+
+
 def sink_watermark(spark: SparkSession, sink_path: str, ts_col: str = "ts"):
-    """S4: the sink's high-watermark, or None for an empty/missing sink.
+    """S4: the sink's high-watermark, or None for a sink that is missing
+    or holds no committed rows. A read failure on an existing sink
+    raises (path_exists): reading it as "no sink" would make
+    append_idempotent re-append the whole history - the duplication
+    Gate 2 exists to prevent.
 
     Reference: get_last_timestamp (main.py:411-435) re-reads the WHOLE
     sheet and takes the last row. Here: one max() aggregate answered from
     parquet footer statistics.
     """
+    from pyspark.errors import AnalysisException
+
+    if not path_exists(spark, sink_path):
+        return None
     try:
         df = spark.read.parquet(sink_path)
-    except Exception:
+    except AnalysisException as e:
+        # no data file at all (a first append killed before its commit
+        # leaves only _temporary/): nothing committed, nothing to skip
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
         return None
-    row = df.agg(F.max(ts_col).alias("wm")).collect()[0]
-    return row["wm"]
+    return df.agg(F.max(ts_col).alias("wm")).collect()[0]["wm"]
 
 
 def write_date_partitioned(
@@ -752,18 +778,12 @@ def merge_aggregate_sink(
     if not touched:
         return 0
     state_cols = ["_cnt"] + [f"_sum_{c}" for c in sum_cols]
-    # Existence must be an explicit filesystem probe, NOT a blanket
-    # except around the read: a transient read failure (FS hiccup,
-    # permissions, corrupt footer) misdiagnosed as "first batch" would
+    # Existence via path_exists, NOT a blanket except around the read:
+    # a read failure misdiagnosed as "first batch" would
     # dynamic-overwrite accumulated state with batch-only partials -
-    # silent data loss. A real read error now propagates.
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    exists = jpath.getFileSystem(hconf).exists(jpath)
-    if exists:
+    # silent data loss. A real read error propagates.
+    if path_exists(spark, path):
         old = spark.read.parquet(path).where(F.col("_bucket").isin(touched))
-    if exists:
         done = {
             r["_bucket"]
             for r in old.groupBy("_bucket")

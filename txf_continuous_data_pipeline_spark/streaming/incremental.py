@@ -44,6 +44,8 @@ from pyspark.sql.types import (
 # stage_events_dir, which converts the testdata's TIMESTAMP(NANOS)).
 from pyspark.sql.types import TimestampType
 
+from ..sources.io import path_exists
+
 # The batch=<id> exactly-once machinery lives in ONE module
 # (commit_log, r11 verdict #6); the private aliases keep every loop
 # and the existing pytest imports stable.
@@ -189,20 +191,15 @@ def gated_idempotent_sink(
             lo, hi = batch_df.agg(
                 F.min(ts_col), F.max(ts_col)
             ).collect()[0]
-            # "Sink missing" is an explicit filesystem probe (the same
-            # discipline as sources/io.merge_aggregate_sink), NOT a
-            # substring match on the AnalysisException message - error
-            # text varies across Spark versions/locales, and a changed
-            # message would re-raise on a genuinely missing sink and
-            # wedge the stream's first batch. Conversely any REAL read
-            # failure on an existing sink (partial file from a crashed
-            # attempt) still raises - swallowing it would re-append the
-            # crashed attempt's committed windows, the exact
-            # duplication Gate 2 exists to prevent.
-            jvm = spark.sparkContext._jvm
-            hconf = spark.sparkContext._jsc.hadoopConfiguration()
-            jpath = jvm.org.apache.hadoop.fs.Path(sink_path)
-            if jpath.getFileSystem(hconf).exists(jpath):
+            # "Sink missing" is sources/io.path_exists, NOT a substring
+            # match on the AnalysisException message (a changed message
+            # would re-raise on a genuinely missing sink and wedge the
+            # stream's first batch). Conversely any REAL read failure on
+            # an existing sink (partial file from a crashed attempt)
+            # still raises - swallowing it would re-append the crashed
+            # attempt's committed windows, the exact duplication Gate 2
+            # exists to prevent.
+            if path_exists(spark, sink_path):
                 # Only sink keys inside the batch's own key range can
                 # collide; the range predicate reaches the parquet scan
                 # (min/max row-group stats), so the dedup read stays
@@ -605,17 +602,13 @@ def streaming_kmeans_run(
     dim = len(seed_centroids[0][1])
 
     def _load_state(sess):
-        # "State missing" is an explicit filesystem probe (the
-        # gated_idempotent_sink discipline above), so ONLY the
+        # "State missing" is sources/io.path_exists, so ONLY the
         # first-run case reseeds; a corrupt/partial state read on an
         # EXISTING path raises loudly - the streaming checkpoint has
         # already committed prior batches, and silently reseeding
         # would drop all accumulated sufficient statistics (r8
         # advice).
-        jvm = sess.sparkContext._jvm
-        hconf = sess.sparkContext._jsc.hadoopConfiguration()
-        jpath = jvm.org.apache.hadoop.fs.Path(state_path)
-        if not jpath.getFileSystem(hconf).exists(jpath):
+        if not path_exists(sess, state_path):
             return None
         rows = sess.read.parquet(state_path).collect()
         # an EXISTING path must hold exactly one row per cluster: a
