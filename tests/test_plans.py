@@ -22,6 +22,15 @@ def test_bar_pipeline_range_join_is_broadcast(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
+def test_bar_pipeline_runs_no_python(spark, sf_dir):
+    # The batch cron path is JVM-only: no Python-built DataFrame (an
+    # ExistingRDD scan runs a Python-worker job per run).
+    from txf_continuous_data_pipeline_spark.plans.pipeline import bar_pipeline_5m
+
+    plan = bar_pipeline_5m(spark, sf_dir)._jdf.queryExecution().executedPlan()
+    assert "ExistingRDD" not in plan.toString()
+
+
 def test_star_join_broadcasts_every_dimension(spark, sf_dir):
     # q5: lineitem joins orders/customer/supplier/nation/region; the
     # small dims must arrive as broadcasts, not fact-side shuffles.

@@ -26,6 +26,7 @@ from txf_continuous_data_pipeline_spark.operators.quality import (
     EXPECTED_5MIN,
     assert_complete,
     completeness_violations,
+    drop_incomplete_sessions,
 )
 from txf_continuous_data_pipeline_spark.operators.sessions import split_and_label
 from txf_continuous_data_pipeline_spark.plans.pipeline import incremental_run
@@ -77,6 +78,40 @@ def test_append_idempotent_empty_sink_is_first_append(spark, tmp_path, state):
     assert sink_watermark(spark, sink) is None
     assert append_idempotent(_two_ticks(spark), sink) == 2
     assert sink_watermark(spark, sink).minute == 5
+
+
+@pytest.mark.parametrize("state", ["missing", "uncommitted"])
+def test_stream_sink_empty_sink_is_first_append(spark, tmp_path, state):
+    """The streaming Gate-2 sink reads an uncommitted sink (only
+    _temporary/ inside) as empty too, instead of failing schema
+    inference on every batch and every replay; a replay appends
+    nothing."""
+    from txf_continuous_data_pipeline_spark.streaming.incremental import (
+        gated_idempotent_sink,
+    )
+
+    sink = str(tmp_path / "sink")
+    if state == "uncommitted":
+        os.makedirs(os.path.join(sink, "_temporary", "0"))
+    write = gated_idempotent_sink(sink, ts_col="ts")
+    write(_two_ticks(spark), 0)
+    assert spark.read.parquet(sink).count() == 2
+    write(_two_ticks(spark), 0)
+    assert spark.read.parquet(sink).count() == 2
+
+
+def test_stream_sink_raises_on_unreadable_sink(spark, tmp_path):
+    from txf_continuous_data_pipeline_spark.streaming.incremental import (
+        gated_idempotent_sink,
+    )
+
+    sink = tmp_path / "sink"
+    sink.mkdir()
+    (sink / "part-0.parquet").write_bytes(b"not a parquet file")
+    write = gated_idempotent_sink(str(sink), ts_col="ts")
+    with pytest.raises(Py4JJavaError, match="not a Parquet file"):
+        write(_two_ticks(spark), 0)
+    assert os.listdir(sink) == ["part-0.parquet"]
 
 
 def _dense_kbar_fixture(spark, n_days: int = 2):
@@ -133,10 +168,29 @@ def test_dropping_any_bar_trips_gate1(spark):
         )
         broken = complete.join(victims, ["session_id", "bar_ts"], "left_anti")
         viol = completeness_violations(broken, EXPECTED_5MIN)
+        assert viol.dtypes == [
+            ("session_id", "string"), ("cnt", "bigint"), ("expected", "bigint")
+        ]
         tripped = {r["session_id"] for r in viol.collect()}
         assert {r["session_id"] for r in victims.collect()} <= tripped
         with pytest.raises(ValueError):
             assert_complete(broken, EXPECTED_5MIN)
+
+        # a session of a kind the map does not name is reported with a
+        # null expected and dropped, however many bars it has
+        some = complete.select(F.min("session_id")).first()[0]
+        unknown = complete.where(F.col("session_id") == some).withColumn(
+            "session_id", F.concat(F.substring_index("session_id", "_", 1), F.lit("_X"))
+        )
+        mixed = complete.unionByName(unknown)
+        x_id = unknown.first()["session_id"]
+        assert [
+            (r["session_id"], r["expected"])
+            for r in completeness_violations(mixed, EXPECTED_5MIN).collect()
+        ] == [(x_id, None)]
+        kept = drop_incomplete_sessions(mixed, EXPECTED_5MIN)
+        assert kept.where(F.col("session_id") == x_id).isEmpty()
+        assert kept.count() == complete.count()
     finally:
         complete.unpersist()
 

@@ -353,15 +353,13 @@ def restate_adjusted_history(
 
 
 def _apply_shift(joined, bars, cfg, price_cols, start_col, end_col):
+    # one projection: every replaced column keeps its position
     diff = F.coalesce(F.col("accumulated_contract_diff"), F.lit(0.0))
-    out = joined
-    for c in price_cols:
-        out = out.withColumn(c, bars[c] + diff)
-    return (
-        out.withColumn("accumulated_contract_diff", diff)
-        .withColumn(
-            "contract_year_month",
-            F.coalesce(F.col("contract_year_month"), F.lit("")),
-        )
-        .drop(start_col, end_col, "next_contract_diff")
+    shifted = {c: bars[c] + diff for c in price_cols}
+    shifted["accumulated_contract_diff"] = diff
+    shifted["contract_year_month"] = F.coalesce(
+        F.col("contract_year_month"), F.lit("")
+    )
+    return joined.withColumns(shifted).drop(
+        start_col, end_col, "next_contract_diff"
     )

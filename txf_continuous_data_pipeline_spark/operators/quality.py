@@ -12,7 +12,8 @@ session that is still in progress.
 The reference implements these with positional slicing (iloc[-200:],
 iloc[:-n]) - meaningless under partitioning. Re-derived here as set-based
 group logic (SURVEY.md "What's hard"): one groupBy(session) count, a
-broadcast join against the expected-count map, and semi/anti joins back
+lookup of each session's expected count in a literal map column keyed
+by its kind (no dimension DataFrame, no join), and semi/anti joins back
 to the fact rows.
 """
 
@@ -32,10 +33,16 @@ def session_counts(df: DataFrame, session_col: str = "session_id") -> DataFrame:
     return df.groupBy(session_col).agg(F.count("*").alias("cnt"))
 
 
-def _expected_df(spark, expected: dict[str, int]):
-    return spark.createDataFrame(
-        [(k, v) for k, v in expected.items()], "kind string, expected long"
-    )
+def expected_count(
+    expected: dict[str, int], session_col: str = "session_id"
+) -> Column:
+    """Expected bar count (bigint) for the session's kind - the suffix of
+    'YYYY-MM-DD_D|N' - looked up in a literal map; null for a kind the
+    map does not name. A literal, so the gate runs no Python: a
+    createDataFrame dimension would be a Python-worker RDD job per run."""
+    kind = F.substring_index(F.col(session_col), "_", -1)
+    pairs = [F.lit(x) for kv in expected.items() for x in kv]
+    return F.create_map(*pairs)[kind].cast("long")
 
 
 def completeness_violations(
@@ -58,11 +65,9 @@ def completeness_violations(
     reference-strict constant map (main.py:331-334; README.md:23-25
     names the strictness deliberate): the calendar must be handed in,
     never inferred. Dimension-sized, broadcast."""
-    counts = session_counts(df, session_col).withColumn(
-        "kind", F.substring_index(session_col, "_", -1)
+    joined = session_counts(df, session_col).withColumn(
+        "expected", expected_count(expected, session_col)
     )
-    exp = _expected_df(df.sparkSession, expected)
-    joined = counts.join(F.broadcast(exp), "kind", "left")
     if calendar is not None:
         joined = joined.join(
             F.broadcast(
@@ -105,13 +110,9 @@ def drop_incomplete_sessions(
     (drop_incomplete_current_session, main.py:326-366) via positional
     slicing; see drop_open_session for that exact semantic.
     """
-    counts = session_counts(df, session_col).withColumn(
-        "kind", F.substring_index(session_col, "_", -1)
-    )
-    exp = _expected_df(df.sparkSession, expected)
     complete = (
-        counts.join(F.broadcast(exp), "kind", "inner")
-        .where(F.col("cnt") == F.col("expected"))
+        session_counts(df, session_col)
+        .where(F.col("cnt") == expected_count(expected, session_col))
         .select(session_col)
     )
     return df.join(F.broadcast(complete), session_col, "left_semi")
@@ -133,14 +134,11 @@ def drop_open_session(
         .agg(F.max(ts_col).alias("_max_ts"), F.count("*").alias("cnt"))
         .orderBy(F.desc("_max_ts"))
         .limit(1)
-        .withColumn("kind", F.substring_index(session_col, "_", -1))
     )
-    exp = _expected_df(df.sparkSession, expected)
-    open_sessions = (
-        last.join(F.broadcast(exp), "kind", "left")
-        .where(F.col("expected").isNull() | (F.col("cnt") < F.col("expected")))
-        .select(session_col)
-    )
+    exp = expected_count(expected, session_col)
+    open_sessions = last.where(
+        exp.isNull() | (F.col("cnt") < exp)
+    ).select(session_col)
     return df.join(F.broadcast(open_sessions), session_col, "left_anti")
 
 

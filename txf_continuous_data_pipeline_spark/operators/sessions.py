@@ -33,8 +33,8 @@ def with_session_labels(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     ('YYYY-MM-DD_D|N'). Night rows before 05:00 are dated to the previous
     calendar day (main.py:285)."""
     ts = F.col(ts_col)
-    return df.withColumn("date_market_type", date_market_type(ts)).withColumn(
-        "session_id", session_id(ts)
+    return df.withColumns(
+        {"date_market_type": date_market_type(ts), "session_id": session_id(ts)}
     )
 
 

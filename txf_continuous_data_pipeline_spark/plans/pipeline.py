@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from ..operators.adjust import backadjust, derive_accumulated_gap
 from ..operators.quality import EXPECTED_5MIN, drop_open_session, watermark_filter
 from ..operators.resample import tumbling_ohlcv
-from ..operators.sessions import split_and_label
+from ..operators.sessions import split_and_label, with_session_labels
 from ..sources import read_table
 
 WEEKLY_GAP = 10.0
@@ -185,17 +185,11 @@ def bar_pipeline_60m(spark: SparkSession, sf_dir: str) -> DataFrame:
         day_offset="45 minutes",
     ).drop("n_bars")
     return _gated_bars(
-        with_session_labels_60(bars60),
+        with_session_labels(bars60, "bar_ts"),
         weekly_settle_config(events),
         EXPECTED_60MIN,
         end_inclusive=False,
     )
-
-
-def with_session_labels_60(bars: DataFrame) -> DataFrame:
-    from ..operators.sessions import with_session_labels
-
-    return with_session_labels(bars, "bar_ts")
 
 
 def incremental_run(

@@ -2279,23 +2279,17 @@ def expected_session_counts_q(spark, sf_dir):
     (operators/quality.completeness_violations +
     operators/calendar.settlement_halfday_calendar)."""
     from ..operators.calendar import settlement_halfday_calendar
-    from ..operators.quality import EXPECTED_5MIN, session_counts
+    from ..operators.quality import EXPECTED_5MIN, expected_count, session_counts
     from ..operators.sessions import split_and_label
 
     labeled = split_and_label(read_table(spark, sf_dir, "events"))
     counts = (
         session_counts(labeled)
-        .withColumn("kind", F.substring_index("session_id", "_", -1))
-        .where(F.col("kind").isin("D", "N"))
-    )
-    exp = spark.createDataFrame(
-        [(k, v) for k, v in EXPECTED_5MIN.items()],
-        "kind string, strict_expected long",
+        .withColumn("strict_expected", expected_count(EXPECTED_5MIN))
+        .where(F.col("strict_expected").isNotNull())
     )
     cal = settlement_halfday_calendar(labeled)
-    out = counts.join(F.broadcast(exp), "kind").join(
-        F.broadcast(cal), "session_id", "left"
-    )
+    out = counts.join(F.broadcast(cal), "session_id", "left")
     eff = F.coalesce("expected_override", "strict_expected")
     return out.select(
         "session_id",

@@ -7,9 +7,9 @@ roles are played by parquet tables:
 
   S1  scan            -> spark.read.parquet (columnar, predicate pushdown)
   S3  config scan     -> small dimension read; callers broadcast it
-  S4  watermark read  -> max(ts) aggregate (parquet footer stats make this
-                         near-free; strictly more correct than the
-                         reference's last-row read, main.py:428-429)
+  S4  watermark read  -> max(ts) aggregate over a typed one-column read
+                         (strictly more correct than the reference's
+                         last-row read, main.py:428-429)
   S5  append sink     -> mode("append").parquet with a watermark filter in
                          front for idempotency (Gate 2, main.py:548-558)
 """
@@ -91,10 +91,12 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     """
     from pyspark.sql.types import TimestampNTZType
 
-    for field in df.schema.fields:
-        if isinstance(field.dataType, TimestampNTZType):
-            df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
-    return df
+    ntz = {
+        f.name: F.col(f.name).cast("timestamp")
+        for f in df.schema.fields
+        if isinstance(f.dataType, TimestampNTZType)
+    }
+    return df.withColumns(ntz) if ntz else df
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -119,9 +121,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if not ns_cols:
         return _normalize_timestamps(spark.read.parquet(path))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in ns_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
+    df = spark.read.parquet(path).withColumns(
+        {c: F.timestamp_micros(F.expr(f"`{c}` DIV 1000")) for c in ns_cols}
+    )
     return _normalize_timestamps(df)
 
 
@@ -231,30 +233,39 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return bool(jpath.getFileSystem(hconf).exists(jpath))
 
 
-def sink_watermark(spark: SparkSession, sink_path: str, ts_col: str = "ts"):
-    """S4: the sink's high-watermark, or None for a sink that is missing
-    or holds no committed rows. A read failure on an existing sink
-    raises (path_exists): reading it as "no sink" would make
-    append_idempotent re-append the whole history - the duplication
-    Gate 2 exists to prevent.
-
-    Reference: get_last_timestamp (main.py:411-435) re-reads the WHOLE
-    sheet and takes the last row. Here: one max() aggregate answered from
-    parquet footer statistics.
-    """
-    from pyspark.errors import AnalysisException
+def sink_column(spark: SparkSession, sink_path: str, field) -> DataFrame | None:
+    """The one Gate-2 sink read: the sink's `field` column (a
+    StructField), read with that schema, or None when the sink is
+    missing (path_exists). Typed, so there is no schema-inference job,
+    and a sink holding only the `_temporary/` of a first append killed
+    before its commit reads as empty instead of failing inference. A
+    corrupt part file still raises when the read runs: taking it for
+    "no sink" would re-append the history Gate 2 exists to protect."""
+    from pyspark.sql.types import StructType
 
     if not path_exists(spark, sink_path):
         return None
-    try:
-        df = spark.read.parquet(sink_path)
-    except AnalysisException as e:
-        # no data file at all (a first append killed before its commit
-        # leaves only _temporary/): nothing committed, nothing to skip
-        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
-            raise
+    return spark.read.schema(StructType([field])).parquet(sink_path)
+
+
+def sink_watermark(spark: SparkSession, sink_path: str, ts_col: str = "ts"):
+    """S4: the sink's high-watermark, or None for a sink that is missing
+    or holds no committed rows. A read failure on an existing sink
+    raises: reading it as "no sink" would make append_idempotent
+    re-append the whole history - the duplication Gate 2 exists to
+    prevent.
+
+    Reference: get_last_timestamp (main.py:411-435) re-reads the WHOLE
+    sheet and takes the last row. Here: one max() aggregate over the
+    typed ts column (sink_column) - a scan of that column, a partial
+    aggregate per task and one single-partition exchange.
+    """
+    from pyspark.sql.types import StructField, TimestampType
+
+    col = sink_column(spark, sink_path, StructField(ts_col, TimestampType()))
+    if col is None:
         return None
-    return df.agg(F.max(ts_col).alias("wm")).collect()[0]["wm"]
+    return col.agg(F.max(ts_col).alias("wm")).collect()[0]["wm"]
 
 
 def write_date_partitioned(

@@ -44,7 +44,7 @@ from pyspark.sql.types import (
 # stage_events_dir, which converts the testdata's TIMESTAMP(NANOS)).
 from pyspark.sql.types import TimestampType
 
-from ..sources.io import path_exists
+from ..sources.io import path_exists, sink_column
 
 # The batch=<id> exactly-once machinery lives in ONE module
 # (commit_log, r11 verdict #6); the private aliases keep every loop
@@ -191,27 +191,23 @@ def gated_idempotent_sink(
             lo, hi = batch_df.agg(
                 F.min(ts_col), F.max(ts_col)
             ).collect()[0]
-            # "Sink missing" is sources/io.path_exists, NOT a substring
-            # match on the AnalysisException message (a changed message
-            # would re-raise on a genuinely missing sink and wedge the
-            # stream's first batch). Conversely any REAL read failure on
-            # an existing sink (partial file from a crashed attempt)
-            # still raises - swallowing it would re-append the crashed
-            # attempt's committed windows, the exact duplication Gate 2
-            # exists to prevent.
-            if path_exists(spark, sink_path):
+            # sources/io.sink_column: None for a missing sink, a typed
+            # key read otherwise - so a sink holding only an uncommitted
+            # _temporary/ reads as empty instead of wedging every batch
+            # on schema inference, while a REAL read failure (corrupt
+            # part file) still raises: swallowing it would re-append
+            # committed windows, the duplication Gate 2 exists to
+            # prevent.
+            existing = sink_column(spark, sink_path, batch_df.schema[ts_col])
+            if existing is None:
+                out = batch_df
+            else:
                 # Only sink keys inside the batch's own key range can
                 # collide; the range predicate reaches the parquet scan
                 # (min/max row-group stats), so the dedup read stays
                 # O(batch) however large the sink grows.
-                existing = (
-                    spark.read.parquet(sink_path)
-                    .where(F.col(ts_col).between(lo, hi))
-                    .select(ts_col)
-                )
+                existing = existing.where(F.col(ts_col).between(lo, hi))
                 out = batch_df.join(F.broadcast(existing), ts_col, "left_anti")
-            else:
-                out = batch_df
             if not out.isEmpty():
                 out.write.mode("append").parquet(sink_path)
         finally:
