@@ -191,13 +191,8 @@ def gated_idempotent_sink(
             lo, hi = batch_df.agg(
                 F.min(ts_col), F.max(ts_col)
             ).collect()[0]
-            # sources/io.sink_column: None for a missing sink, a typed
-            # key read otherwise - so a sink holding only an uncommitted
-            # _temporary/ reads as empty instead of wedging every batch
-            # on schema inference, while a REAL read failure (corrupt
-            # part file) still raises: swallowing it would re-append
-            # committed windows, the duplication Gate 2 exists to
-            # prevent.
+            # typed key read: an uncommitted sink (only _temporary/)
+            # reads as empty; a corrupt part file still raises
             existing = sink_column(spark, sink_path, batch_df.schema[ts_col])
             if existing is None:
                 out = batch_df
